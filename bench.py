@@ -122,14 +122,14 @@ def compact_line(timings: dict[str, float], total: float, sf: float,
     """The driver stores only the LAST 2000 chars of stdout and
     json-parses from there, so the final line must fit 1900 chars.
     Staged fallback instead of crashing the driver run: 3-char keys →
-    floor slow entries (≥10s) to whole seconds → floor everything ≥1s
-    → 2-char keys (1s floor re-applied) → floor EVERY value to whole
-    seconds (sub-second entries become 0 — full precision stays on
+    round slow entries (≥10s) to whole seconds → round everything ≥1s
+    → 2-char keys (1s rounding re-applied) → round EVERY value to whole
+    seconds (sub-second entries become 0 or 1 — full precision stays on
     the full_queries line) → POSITIONAL stages: drop the keys entirely
     and emit ``queries`` as an array of values in sorted-full-name
     order (``queries_key: "sorted-name-positional"`` — the decoder is
     ``sorted(QUERIES)`` from the repo), first with sub-second values
-    at 1 decimal, then with every value floored to whole seconds;
+    at 1 decimal, then with every value rounded to whole seconds;
     both positional stages slim ``warm`` to {value, n_rerun} (the
     per-entry warm table stays on the full_warm_queries line) so all
     565 entries fit the budget losslessly-by-name (round-12 fix: the
@@ -157,16 +157,16 @@ def compact_line(timings: dict[str, float], total: float, sf: float,
             d.update(extra)
         return json.dumps(d, separators=(",", ":"), sort_keys=True)
 
-    def floored(q: dict, floor: int) -> dict:
-        return {k: (int(round(v)) if v >= floor else v) for k, v in q.items()}
+    def rounded(q: dict, threshold: float) -> dict:
+        return {k: (int(round(v)) if v >= threshold else v) for k, v in q.items()}
 
     compact = _build_compact(timings, 3)
     line = envelope(compact)
     for fallback in (
-        lambda: floored(compact, 10),
-        lambda: floored(compact, 1),
-        lambda: floored(_build_compact(timings, 2), 1),
-        lambda: floored(_build_compact(timings, 2), 0),
+        lambda: rounded(compact, 10),
+        lambda: rounded(compact, 1),
+        lambda: rounded(_build_compact(timings, 2), 1),
+        lambda: rounded(_build_compact(timings, 2), 0),
     ):
         if len(line) < 1900:
             return line
@@ -176,7 +176,7 @@ def compact_line(timings: dict[str, float], total: float, sf: float,
         return line
     # Positional stages: values only, sorted-full-name order, warm
     # slimmed to its two scalars. First with sub-second values at
-    # 1 decimal (ints ≥1s); if that still overflows, floor everything
+    # 1 decimal (ints ≥1s); if that still overflows, round everything
     # to whole seconds — every entry stays present either way.
     key = {"queries_key": "sorted-name-positional"}
     for vals in (
@@ -189,7 +189,7 @@ def compact_line(timings: dict[str, float], total: float, sf: float,
             return line
     # Last stage: N slowest only. Monotone in N, so walk down from the
     # largest candidate until the envelope fits.
-    two_char = floored(_build_compact(timings, 2), 0)
+    two_char = rounded(_build_compact(timings, 2), 0)
     by_slowest = sorted(two_char, key=lambda k: (-two_char[k], k))
     for n in range(len(by_slowest), 0, -1):
         kept = {k: two_char[k] for k in by_slowest[:n]}

@@ -14,6 +14,8 @@ distributed triangle algorithm, never an all-pairs pass.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -671,6 +673,25 @@ ORDER BY role, rank
 """
 
 
+def _parquet_fits(path: str, max_bytes: int) -> bool:
+    """Whether the local parquet file, or directory of part files (hidden
+    and ``_`` files skipped), at ``path`` holds at most ``max_bytes``.
+    False when unreadable (non-local URI): no byte evidence, no hint."""
+    try:
+        if os.path.isdir(path):
+            size = sum(
+                os.path.getsize(os.path.join(d, f))
+                for d, _, files in os.walk(path)
+                for f in files
+                if not f.startswith((".", "_"))
+            )
+        else:
+            size = os.path.getsize(path)
+    except OSError:
+        return False
+    return size <= max_bytes
+
+
 @query("mr_hits", oracle=HITS_SQL)
 def mr_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
@@ -708,12 +729,7 @@ def mr_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leaf bytes (ADVICE r11): past ~64 MB of raw customer parquet the
     # two-column score projection approaches real broadcast-memory
     # cost and the hint is dropped — AQE/SMJ then picks the strategy.
-    try:
-        import os as _os
-
-        _hub_fits = _os.path.getsize(cat.path("customer")) <= 64 * 1024 * 1024
-    except OSError:  # non-local URI: no byte evidence, don't force it
-        _hub_fits = False
+    _hub_fits = _parquet_fits(cat.path("customer"), 64 * 1024 * 1024)
     for half in ("h1", "a2", "h2"):
         if half.startswith("h"):
             r = (

@@ -195,8 +195,8 @@ def txt_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- txt_repetition ----------------------------------------------------
 #
 # Oracle computes the same top-bigram fraction over string bigrams;
-# the Spark side hashes bigrams (xxhash64) — identical counts modulo
-# 2^-64 collisions.
+# the Spark side hashes bigrams (xxhash64) per row with
+# textstats.top_bigram_frac — identical counts modulo 2^-64 collisions.
 
 TXT_REP_SQL = """
 WITH tok AS (
@@ -218,8 +218,11 @@ FROM cnt GROUP BY doc_id, nt
 @query("txt_repetition", oracle=TXT_REP_SQL)
 def txt_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).documents
-    return T.top_bigram_fraction(d).select(
-        "doc_id", F.col("n_tokens").cast("long").alias("n_tokens"), "top_bigram_frac"
+    tok = d.select("doc_id", T.tokens("text").alias("t"))
+    return tok.filter(F.size("t") >= 2).select(
+        "doc_id",
+        F.size("t").cast("long").alias("n_tokens"),
+        T.top_bigram_frac("t").alias("top_bigram_frac"),
     )
 
 

@@ -247,19 +247,6 @@ def minhash_signature_from_hashes(hs: Column, num_hashes: int = 32) -> Column:
     )
 
 
-def minhash_signature(text_col: str, num_hashes: int = 32, k: int = 3) -> Column:
-    """Signature straight from a text column. NB: fine for one-off
-    use; the LSH pipeline goes through ``_token_rows`` +
-    ``shingle_hashes_from_tokens`` so the split/hash work is
-    materialized once, not inlined into every remix column."""
-    t = tokens(text_col)
-    idx = F.sequence(F.lit(1), F.size(t) - (k - 1))
-    hs = F.array_distinct(
-        F.transform(idx, lambda i: F.xxhash64(*[F.element_at(t, i + j) for j in range(k)]))
-    )
-    return minhash_signature_from_hashes(hs, num_hashes)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -449,21 +449,6 @@ def train_spherical_kmeans_df(
     return cents
 
 
-def train_spherical_kmeans(
-    corpus: DataFrame,
-    n_clusters: int = 10,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> list[list[float]]:
-    """Driver-side centroid list (k×dim floats — the only collect)."""
-    cents = train_spherical_kmeans_df(
-        corpus, n_clusters=n_clusters, iters=iters, id_col=id_col, vec_col=vec_col, dim=dim
-    )
-    return [r.cv for r in cents.orderBy("cl").collect()]
-
-
 def knn_join_ivf_trained(
     queries: DataFrame,
     corpus: DataFrame,

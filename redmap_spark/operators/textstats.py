@@ -163,33 +163,29 @@ def redact_pii(text: Column | str) -> Column:
 # ------------------------------------------------ repetition detection
 
 
-def top_bigram_fraction(df, id_col: str = "doc_id", text_col: str = "text"):
-    """Per-document repetition signal (Gopher §A1.1 dup rules): the
-    fraction of token bigrams occupied by the single most frequent
-    bigram. Bigrams are hashed (multi-arg xxhash64 on the pre-split
-    token array — see operators/dedup.py for why the split must be a
-    bound column) so the per-doc groupBy shuffles longs, not strings.
-    High fraction ⇒ boilerplate / repeated-phrase document.
-    """
-    tok = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("t")).filter(
-        F.size("t") >= 2
-    )
-    bg = tok.select(
-        "id",
-        F.size("t").alias("nt"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("t") - 1),
-                lambda i: F.xxhash64(F.element_at("t", i), F.element_at("t", i + 1)),
-            )
-        ).alias("b"),
-    )
-    per_bigram = bg.groupBy("id", "nt", "b").agg(F.count(F.lit(1)).alias("c"))
-    return per_bigram.groupBy("id", "nt").agg(
-        F.round(F.max("c").cast("double") / (F.col("nt") - 1).cast("double"), 6).alias(
-            "top_bigram_frac"
+def top_bigram_frac(t: Column | str) -> Column:
+    """Repetition signal (Gopher §A1.1 dup rules): the share of a token
+    array's bigrams taken by its most frequent bigram, rounded to 6;
+    NULL below 2 tokens. High ⇒ boilerplate / repeated phrases. Per
+    row, no shuffle: the zipped offset slices are hashed (xxhash64) and
+    sorted, and one fold finds the longest run of equal hashes. No
+    lambda indexes ``t``: a pushed-down filter inlines the token split,
+    and an indexing lambda would re-split it per bigram (dedup.py)."""
+    t = F.col(t) if isinstance(t, str) else t
+    n = F.size(t)
+    pairs = F.arrays_zip(F.slice(t, 1, n - 1), F.slice(t, 2, n - 1))
+    hs = F.array_sort(F.transform(pairs, lambda p: F.xxhash64(p)))
+    acc0 = F.struct(F.lit(None).cast("long").alias("prev"), F.lit(0).alias("run"),
+                    F.lit(0).alias("best"))
+
+    def step(acc: Column, h: Column) -> Column:
+        run = F.when(acc["prev"] == h, acc["run"] + 1).otherwise(F.lit(1))
+        return F.struct(
+            h.alias("prev"), run.alias("run"), F.greatest(acc["best"], run).alias("best")
         )
-    ).select(F.col("id").alias(id_col), F.col("nt").alias("n_tokens"), "top_bigram_frac")
+
+    best = F.aggregate(hs, acc0, step, lambda acc: acc["best"])
+    return F.when(n >= 2, F.round(best / (n - 1).cast("double"), 6))
 
 
 # ----------------------------------------------------- document chunking

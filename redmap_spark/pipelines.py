@@ -11,16 +11,20 @@ flow, all in ONE Catalyst plan until the sink:
       → chunking             (overlapping token windows)
       → mixture rebalance    (per-language deterministic hash sample)
 
-Every stage is a pure DataFrame transform: no Python per row, no
-action until write. At 100 TB this runs as one job whose only
-shuffles are the dedup groupBy and the repetition groupBy — filters,
-redaction, chunking and sampling are map-side.
+The plan is one parquet scan and one shuffle: the dedup is a
+``row_number()`` window partitioned by fingerprint, so each document
+crosses the exchange once, text included. Everything after it runs
+map-side in the post-shuffle stage: both gates are per-row column
+predicates (the repetition gate sorts each document's hashed bigrams
+within the row), then redaction, chunking and sampling. No Python
+per row, no action until write.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from redmap_spark.operators import textstats as T
 
@@ -35,19 +39,24 @@ def prepare_training_corpus(
     """Returns (doc_id, chunk_idx, lang, chunk_text, n_chunk_tokens)
     ready to tokenize. ``mixture`` maps lang → keep fraction
     (deterministic hash sample); None keeps everything."""
-    # 1. exact dedup: keep the smallest doc_id per normalized text
-    w_fp = docs.select("doc_id", "lang", "text", T.fingerprint("text").alias("fp"))
-    reps = w_fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    deduped = w_fp.join(reps, ["fp", "doc_id"], "inner").drop("fp")
+    # 1. exact dedup: keep the smallest doc_id per normalized text (ties
+    #    on doc_id broken by lang, then text; a repeated (fp, doc_id)
+    #    row is kept once; rows without a doc_id are dropped). The
+    #    window's exchange is the only shuffle.
+    w = Window.partitionBy("fp").orderBy("doc_id", "lang", "text")
+    deduped = (
+        docs.filter(F.col("doc_id").isNotNull())
+        .select("doc_id", "lang", "text", T.fingerprint("text").alias("fp"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("fp", "rn")
+    )
 
-    # 2. Gopher-rule quality gate (pure column predicate)
-    quality = deduped.filter(T.gopher_passes("text"))
-
-    # 3. repetition gate (one groupBy over hashed bigrams)
-    rep = T.top_bigram_fraction(quality).filter(
-        F.col("top_bigram_frac") <= max_top_bigram_frac
-    ).select("doc_id")
-    kept = quality.join(rep, "doc_id", "left_semi")
+    # 2. Gopher-rule quality gate and 3. repetition gate: per-row
+    #    column predicates, map-side after the dedup shuffle
+    kept = deduped.filter(T.gopher_passes("text")).filter(
+        T.top_bigram_frac(T.tokens("text")) <= max_top_bigram_frac
+    )
 
     # 4. PII redaction (map-side regex chain)
     redacted = kept.withColumn("text", T.redact_pii("text"))

@@ -32,10 +32,6 @@ def pushed_filters(df: DataFrame) -> str:
     return "\n".join(line for line in plan.splitlines() if "PushedFilters" in line)
 
 
-def count_op(df: DataFrame, op: str) -> int:
-    return plan_string(df, "formatted").count(op)
-
-
 PYTHON_PLAN_NODES = (
     "BatchEvalPython",      # row-at-a-time Python UDF
     "ArrowEvalPython",      # pandas UDF

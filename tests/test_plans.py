@@ -1014,3 +1014,25 @@ def test_spread_skips_heal_when_leaf_stat_fails(spark, tmp_path, monkeypatch):
         assert spread(narrow) is narrow
     finally:
         monkeypatch.setattr(_os.path, "getsize", real_getsize)
+
+
+def test_hub_broadcast_gate_sums_parquet_directory(spark, tmp_path):
+    """mr_hits gates its hub-vector broadcast on the customer table's
+    bytes. On a directory-style parquet dataset the gate must sum the
+    part files (getsize on the directory returns the inode size, which
+    would always pass), and refuse past the bound."""
+    from redmap_spark.inventory.graph import _parquet_fits
+
+    p = tmp_path / "customer.parquet"
+    spark.range(0, 60000).selectExpr("id", "sha2(cast(id AS string), 256) AS h") \
+        .repartition(4).write.parquet(str(p))
+    parts = [f for f in p.iterdir() if f.name.startswith("part-")]
+    assert len(parts) == 4
+    total = sum(f.stat().st_size for f in parts)
+    largest = max(f.stat().st_size for f in parts)
+    bound = (largest + total) // 2  # above every single file, below the sum
+    assert p.stat().st_size <= bound  # the inode size alone would pass
+    assert not _parquet_fits(str(p), bound)
+    assert _parquet_fits(str(p), total)
+    assert _parquet_fits(str(parts[0]), bound)
+    assert not _parquet_fits(str(tmp_path / "missing.parquet"), bound)

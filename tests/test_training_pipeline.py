@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
+from redmap_spark.operators.textstats import top_bigram_frac
 from redmap_spark.pipelines import prepare_training_corpus
-from redmap_spark.plans.explain import has_python_eval
+from redmap_spark.plans.explain import executed_plan, has_python_eval
 from tests.conftest import SF_DIR
 
 
@@ -30,6 +33,45 @@ def test_training_pipeline_stays_jvm(spark):
     docs = Catalog(spark, SF_DIR).documents
     out = prepare_training_corpus(docs)
     assert not has_python_eval(out)
+
+
+def test_training_pipeline_one_scan_one_shuffle(spark):
+    """Dedup is one window over the fingerprint and both gates are
+    per-row predicates: the documents are read once and cross exactly
+    one exchange, and the output does not depend on the input's
+    partitioning."""
+    docs = Catalog(spark, SF_DIR).documents
+    out = prepare_training_corpus(docs)
+    plan = executed_plan(out)
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    rows = sorted(map(tuple, out.collect()))
+    assert rows
+    again = prepare_training_corpus(docs.repartition(7)).collect()
+    assert sorted(map(tuple, again)) == rows
+
+
+def _top_bigram_frac_ref(t):
+    if t is None or len(t) < 2:
+        return None
+    c = Counter(zip(t, t[1:]))
+    return round(max(c.values()) / (len(t) - 1), 6)
+
+
+def test_top_bigram_frac_matches_counter_reference(spark):
+    cases = [
+        ["solo"],
+        ["la"] * 7,
+        None,
+        "the cat sat on the mat and the cat sat on the rug".split(" "),
+        [],
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(cases)], "i int, t array<string>")
+    got = {r.i: r.f for r in df.select("i", top_bigram_frac("t").alias("f")).collect()}
+    want = {i: _top_bigram_frac_ref(t) for i, t in enumerate(cases)}
+    assert got == want
+    assert want[0] is None and want[1] == 1.0 and want[2] is None
+    assert 0 < want[3] < 1
 
 
 def test_training_pipeline_dedups_and_filters(spark):
