@@ -56,27 +56,12 @@ from redmap_spark.inventory import regress  # noqa: F401
 # (tests/test_oracle.py::test_window_rotation_covers_all_oracles) enforces
 # that no slot is wasted on an already-verified entry.
 _WINDOW_FIRST = [
-    # Round-12 rotation: the 102 oracle entries that have never carried a
-    # driver hash_match (union of CORRECTNESS_r01..r11 — round 11 verified
-    # the previous window's first 50, q_item_cf..q_ledoit_wolf, so they
-    # drop off the front), in prior registration order. The driver
-    # verifies the first 50 per round; the remainder queue as
-    # fully-unverified overflow for rounds 13+. All 102 were additionally
-    # hash-verified in full local sweeps at sf0.01 AND sf0.1
-    # (CORRECTNESS_full_r11.json / CORRECTNESS_full_r11_sf01.json).
-    "q_ulcer_index", "q_gpd_tail",
-    "q_chain_ladder", "q_price_stickiness", "q_forecast_combo", "q_stl_strength",
-    "q_mase", "q_diebold_mariano", "q_theil_u_decomposition", "q_analogue_forecast",
-    "q_mincer_zarnowitz", "q_pesaran_timmermann", "q_turning_points", "q_ratio_to_ma",
-    "q_haar_energy", "q_transfer_entropy", "q_adstock_mmm", "q_kernel_smoother",
-    "q_interval_score", "q_crps_empirical", "q_pit_calibration", "q_oos_detector",
-    "q_fisher_exact", "q_cox_onestep", "q_ph_assumption", "q_meta_analysis",
-    "q_msprt", "q_bayes_factor_bic", "q_evalue_sensitivity", "q_effect_sizes",
-    "q_bland_altman", "q_lee_bounds", "q_berkson_logit", "q_twfe_did",
-    "q_weighted_kappa", "q_haberman_residuals", "q_enrichment_ora", "q_qini_auuc",
-    "q_mcf_recurrent", "q_bullwhip", "q_safety_stock", "q_risk_pooling",
-    "q_kraljic", "q_perfect_order", "q_eta_promise", "q_slo_burn_rate",
-    "q_output_file_planner", "q_range_partition_planner", "q_selectivity_audit", "q_session_gap_sweep",
+    # Round-13 rotation: the 52 oracle entries that have never carried a
+    # hash_match in a CORRECTNESS run (union of CORRECTNESS_r01..r12 —
+    # round 12 verified the previous window's first 50,
+    # q_ulcer_index..q_session_gap_sweep, so they drop off the front), in
+    # prior registration order. Each round verifies the first 50; the last
+    # two queue for round 14.
     "q_p_chart", "q_crow_amsaa", "q_acceptance_sampling", "q_western_electric",
     "q_threshold_opt", "q_apportionment", "q_ndr", "q_cohort_payback",
     "q_topsis", "q_dissimilarity_index", "q_location_quotient", "q_lorenz_asymmetry",

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
+from redmap_spark.inventory._normal import inv_phi, phi
 from redmap_spark.inventory.registry import query, spread
 from redmap_spark.plans.prefix import two_phase_row_number
 
@@ -2096,42 +2097,15 @@ def q_cross_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ln(total spend) is OBSERVED only for customers who ever order, so a
 # naive OLS of spend on balance is conditioned on selection. Step 1
 # estimates the selection propensity per balance bucket (exact
-# empirical shares, clamped + 6-rounded), maps it through the house
-# A&S 26.2.23 inverse-normal rational chain to a probit index z, and
-# forms the inverse Mills ratio λ = φ(z)/Φ(z) (φ literal-constant
-# normal pdf, Φ the house erfc chain). Step 2 regresses y on
-# [1, x, λ] via the closed-form 3×3 Cramer solve over 9-rounded
-# decimal moment folds, reporting the naive slope, the corrected
-# slope, the Mills coefficient and the bias shift. Scale: one
+# empirical shares, clamped + 6-rounded), maps it through
+# _normal.inv_phi to a probit index z, and forms the inverse Mills
+# ratio λ = φ(z)/Φ(z) (φ literal-constant normal pdf, Φ =
+# _normal.phi). Step 2 regresses y on [1, x, λ] via the closed-form
+# 3×3 Cramer solve over 9-rounded decimal moment folds, reporting the
+# naive slope, the corrected slope, the Mills coefficient and the bias
+# shift. Scale: one
 # customer∪orders scan per step; the bucket grid broadcasts back;
 # the solve is 1-row algebra.
-
-_INV_NORM_CONSTS = (2.515517, 0.802853, 0.010328, 1.432788, 0.189269,
-                    0.001308)
-
-
-def _inv_norm_sql(p: str) -> str:
-    """A&S 26.2.23 rational approximation of Φ⁻¹(p), |err| < 4.5e-4."""
-    c0, c1, c2, d1, d2, d3 = _INV_NORM_CONSTS
-    pp = f"(CASE WHEN ({p}) <= 0.5 THEN ({p}) ELSE 1.0 - ({p}) END)"
-    sgn = f"(CASE WHEN ({p}) <= 0.5 THEN -1.0 ELSE 1.0 END)"
-    t = f"sqrt(-2.0 * ln({pp}))"
-    return (
-        f"({sgn} * ({t} - ({c0} + {t} * ({c1} + {t} * {c2}))"
-        f" / (1.0 + {t} * ({d1} + {t} * ({d2} + {t} * {d3})))))"
-    )
-
-
-def _inv_norm_col(p):
-    """Column twin of _inv_norm_sql (identical double chain)."""
-    c0, c1, c2, d1, d2, d3 = _INV_NORM_CONSTS
-    pp = F.when(p <= 0.5, p).otherwise(1.0 - p)
-    sgn = F.when(p <= 0.5, F.lit(-1.0)).otherwise(F.lit(1.0))
-    t = F.sqrt(-2.0 * F.log(pp))
-    return sgn * (
-        t - (c0 + t * (c1 + t * c2)) / (1.0 + t * (d1 + t * (d2 + t * d3)))
-    )
-
 
 HECKMAN_SQL = f"""
 WITH sel AS MATERIALIZED (
@@ -2150,8 +2124,8 @@ WITH sel AS MATERIALIZED (
 ), mills AS (
   SELECT bin, z,
          round(exp(-z * z / 2.0) / 2.506628274631
-               / GREATEST({{PHI}}, 1e-12), 6) AS lam
-  FROM (SELECT bin, round({_inv_norm_sql('p')}, 6) AS z FROM bins)
+               / GREATEST({phi('z')}, 1e-12), 6) AS lam
+  FROM (SELECT bin, round({inv_phi('p')}, 6) AS z FROM bins)
 ), spend AS (
   SELECT o_custkey AS cust,
          ln(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)) AS y
@@ -2205,19 +2179,8 @@ WHERE s.deta <> 0 AND s.n * s.sxx - s.sx * s.sx <> 0
 """
 
 
-def _phi_sql_local(x: str) -> str:
-    from redmap_spark.inventory.ops import _phi_sql
-
-    return _phi_sql(x)
-
-
-HECKMAN_SQL = HECKMAN_SQL.replace("{PHI}", _phi_sql_local("z"))
-
-
 @query("q_heckman_mills", oracle=HECKMAN_SQL)
 def q_heckman_mills(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from redmap_spark.inventory.ops import _phi_col
-
     c = Catalog(spark, sf_dir)
     sel = (
         c.customer.select("c_custkey", "c_acctbal")
@@ -2252,7 +2215,7 @@ def q_heckman_mills(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("p")
     )
-    z = F.round(_inv_norm_col(F.col("p")), 6)
+    z = F.round(inv_phi(F.col("p")), 6)
     zc = F.col("z")
     mills = bins.select("bin", z.alias("z")).select(
         "bin",
@@ -2260,7 +2223,7 @@ def q_heckman_mills(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.exp(-zc * zc / 2.0)
             / 2.506628274631
-            / F.greatest(_phi_col(zc), F.lit(1e-12)),
+            / F.greatest(phi(zc), F.lit(1e-12)),
             6,
         ).alias("lam"),
     )

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
+from redmap_spark.inventory._normal import erfc_sqrt2
 from redmap_spark.inventory.registry import dec, query, spread
 from redmap_spark.plans.prefix import two_phase_cumsum, two_phase_row_number
 
@@ -1229,17 +1230,16 @@ def q_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 # α=0.05 without correction). Moments are exact decimal sums
 # (acctbal and acctbal² as DECIMAL(18,2)/DECIMAL(37,4)); z is the
 # one-sample z against the global population std; the two-sided
-# p-value is poly(t)·exp(−x²) via the Abramowitz–Stegun 7.1.26 erfc
-# approximation (the q_survival_km exp() precedent — identical double
-# expression both engines, pre-rounded to 9 decimals so the BH
-# ordering is cross-engine stable). BH adjustment is the textbook
+# p-value is _normal.erfc_sqrt2(|z|) (A&S 7.1.26, one double chain
+# rendered for both engines), pre-rounded to 9 decimals so the BH
+# ordering is cross-engine stable. BH adjustment is the textbook
 # step-up: rank p ascending (ties broken by nation), adjusted
 # p_j = min_{k≥j}(p_k·m/k) as a suffix-min window, capped at 1.
 # Scale shape: one customer scan partial-aggregates to the 25-nation
 # grid joined to a broadcast 1-row global; everything after touches
 # 25 rows.
 
-BH_FDR_SQL = """
+BH_FDR_SQL = f"""
 WITH c AS (
   SELECT c_nationkey,
          CAST(c_acctbal AS DECIMAL(18,2)) AS bal
@@ -1267,19 +1267,7 @@ WITH c AS (
   JOIN nation ON n_nationkey = c_nationkey
 ), pv AS (
   SELECT n_name, n1, mean_bal, z,
-         round(
-           (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-           * (0.254829592
-              + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-              * (-0.284496736
-                 + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                 * (1.421413741
-                    + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                    * (-1.453152027
-                       + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                       * 1.061405429))))
-           * exp(-(abs(z) / sqrt(2.0)) * (abs(z) / sqrt(2.0))), 9)
-           AS p_raw
+         round({erfc_sqrt2('abs(z)')}, 9) AS p_raw
   FROM zt
 ), rk AS (
   SELECT n_name, n1, mean_bal, z, p_raw,
@@ -1331,18 +1319,9 @@ def q_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(mean1, 6).alias("mean_bal"),
         F.round(z, 6).alias("z"),
     )
-    # A&S 7.1.26: p_two = poly(t) * exp(-x^2), x = |z|/sqrt(2)
-    x = F.abs(F.col("z")) / F.sqrt(F.lit(2.0))
-    t = 1.0 / (1.0 + 0.3275911 * x)
-    poly = t * (
-        0.254829592
-        + t * (-0.284496736
-               + t * (1.421413741
-                      + t * (-1.453152027 + t * 1.061405429)))
-    )
     pv = zt.select(
         "n_name", "n1", "mean_bal", "z",
-        F.round(poly * F.exp(-x * x), 9).alias("p_raw"),
+        F.round(erfc_sqrt2(F.abs(F.col("z"))), 9).alias("p_raw"),
     )
     w = Window.orderBy("p_raw", "n_name")
     rk = pv.select(

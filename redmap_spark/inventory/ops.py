@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
+from redmap_spark.inventory._normal import phi
 from redmap_spark.inventory.registry import query, spread
 from redmap_spark.plans.prefix import two_phase_cumsum
 
@@ -298,33 +299,11 @@ def q_erlang_c(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the j = n+1−i substitution folds both tail sums into ONE ordered
 # scan — no reverse-rank self-join). Moments are exact: decimal-sum
 # mean, cancellation-safe Σ(x−m)² with 6-rounded decimal terms; Φ is
-# the house A&S 7.1.26 erfc chain (identical double ops both engines,
-# clamped at 1e-300 before ln). Ranks order by (acctbal, custkey) so
-# ties are pinned. Small-sample correction A*² = A²(1+0.75/n+2.25/n²)
-# against the 5% critical value 0.787. Scale: two fact scans plus one
-# grouped window sort — the standard distributed per-key order-stat
-# shape.
-
-
-def _phi_sql(x: str) -> str:
-    """SQL for Φ(x) via the house A&S 7.1.26 erfc chain (any-sign x)."""
-
-    def half_erfc(u: str) -> str:
-        # 0.5*erfc(u/sqrt(2)) for u >= 0
-        t = f"(1.0 / (1.0 + 0.3275911 * (({u}) / sqrt(2.0))))"
-        poly = (
-            f"({t} * (0.254829592 + {t} * (-0.284496736 + {t} * "
-            f"(1.421413741 + {t} * (-1.453152027 + {t} * 1.061405429)))))"
-        )
-        return (
-            f"(0.5 * {poly} * exp(-(({u}) / sqrt(2.0)) "
-            f"* (({u}) / sqrt(2.0))))"
-        )
-
-    return (
-        f"(CASE WHEN ({x}) >= 0 THEN 1.0 - {half_erfc(x)} "
-        f"ELSE {half_erfc(f'-({x})')} END)"
-    )
+# _normal.phi, clamped at 1e-300 before ln. Ranks order by (acctbal,
+# custkey) so ties are pinned. Small-sample correction
+# A*² = A²(1+0.75/n+2.25/n²) against the 5% critical value 0.787.
+# Scale: two fact scans plus one grouped window sort — the standard
+# distributed per-key order-stat shape.
 
 
 AD_SQL = f"""
@@ -349,9 +328,9 @@ WITH m1 AS (
   WHERE m.sd > 0
 ), terms AS (
   SELECT segment, n, mu, sd,
-         round((2 * i - 1) * ln(GREATEST({_phi_sql('z')}, 1e-300))
+         round((2 * i - 1) * ln(GREATEST({phi('z')}, 1e-300))
                + (2 * n - 2 * i + 1)
-                 * ln(GREATEST({_phi_sql('-z')}, 1e-300)), 6) AS term
+                 * ln(GREATEST({phi('-z')}, 1e-300)), 6) AS term
   FROM ranked
 ), a2 AS (
   SELECT segment, n, mu, sd,
@@ -367,28 +346,6 @@ SELECT segment, n, round(mu, 2) AS mean_bal, round(sd, 6) AS std_bal,
 FROM a2
 ORDER BY segment
 """
-
-
-def _phi_col(x):
-    """Φ(x) via the house A&S 7.1.26 erfc chain (any-sign Column)."""
-
-    def half_erfc(u):
-        t = 1.0 / (1.0 + 0.3275911 * (u / F.sqrt(F.lit(2.0))))
-        poly = t * (
-            0.254829592
-            + t
-            * (
-                -0.284496736
-                + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429))
-            )
-        )
-        return (
-            0.5
-            * poly
-            * F.exp(-(u / F.sqrt(F.lit(2.0))) * (u / F.sqrt(F.lit(2.0))))
-        )
-
-    return F.when(x >= 0, 1.0 - half_erfc(x)).otherwise(half_erfc(-x))
 
 
 @query("q_anderson_darling", oracle=AD_SQL)
@@ -438,9 +395,9 @@ def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z, n, i = F.col("z"), F.col("n"), F.col("i")
     term = F.round(
-        (2 * i - 1) * F.log(F.greatest(_phi_col(z), F.lit(1e-300)))
+        (2 * i - 1) * F.log(F.greatest(phi(z), F.lit(1e-300)))
         + (2 * n - 2 * i + 1)
-        * F.log(F.greatest(_phi_col(-z), F.lit(1e-300))),
+        * F.log(F.greatest(phi(-z), F.lit(1e-300))),
         6,
     )
     a2 = (

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
+from redmap_spark.inventory._normal import erfc_sqrt2
 from redmap_spark.inventory.registry import query, spread
 
 # -- q_friedman_test ---------------------------------------------------
@@ -1352,12 +1353,12 @@ def q_process_capability(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mean?" z-tests — the FWER sibling of q_bh_fdr's FDR step-up (Holm
 # controls ANY false positive; BH controls the false-discovery
 # RATE; run on different test families by design). Same exact
-# decimal moments and A&S 7.1.26 erfc p-values (pre-rounded to 9 so
-# the ordering is cross-engine stable); Holm adjustment is the
+# decimal moments and _normal.erfc_sqrt2 p-values (pre-rounded to 9
+# so the ordering is cross-engine stable); Holm adjustment is the
 # prefix-MAX of (m−j+1)·p over ascending p, capped at 1. Scale: one
 # broadcast-dim join + partial-aggregated scan → 25-row grid.
 
-HOLM_SQL = """
+HOLM_SQL = f"""
 WITH li AS (
   SELECT p.p_brand AS brand, CAST(l.l_quantity AS DECIMAL(8,2)) AS q
   FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
@@ -1381,19 +1382,7 @@ WITH li AS (
   FROM per CROSS JOIN gstat
 ), pv AS (
   SELECT brand, n1, mean_qty, z,
-         round(
-           (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-           * (0.254829592
-              + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-              * (-0.284496736
-                 + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                 * (1.421413741
-                    + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                    * (-1.453152027
-                       + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                       * 1.061405429))))
-           * exp(-(abs(z) / sqrt(2.0)) * (abs(z) / sqrt(2.0))), 9)
-           AS p_raw
+         round({erfc_sqrt2('abs(z)')}, 9) AS p_raw
   FROM zt
 ), rk AS (
   SELECT brand, n1, mean_qty, z, p_raw,
@@ -1442,17 +1431,9 @@ def q_holm_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(mean1, 6).alias("mean_qty"),
         F.round(z, 6).alias("z"),
     )
-    x = F.abs(F.col("z")) / F.sqrt(F.lit(2.0))
-    t = 1.0 / (1.0 + 0.3275911 * x)
-    poly = t * (
-        0.254829592
-        + t * (-0.284496736
-               + t * (1.421413741
-                      + t * (-1.453152027 + t * 1.061405429)))
-    )
     pv = zt.select(
         "brand", "n1", "mean_qty", "z",
-        F.round(poly * F.exp(-x * x), 9).alias("p_raw"),
+        F.round(erfc_sqrt2(F.abs(F.col("z"))), 9).alias("p_raw"),
     )
     w = Window.orderBy("p_raw", "brand")  # 25-row grid sort
     rk = pv.select(

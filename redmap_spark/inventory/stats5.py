@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
+from redmap_spark.inventory._normal import erfc_sqrt2, phi
 from redmap_spark.inventory.registry import query, spread
 from redmap_spark.plans.prefix import two_phase_cumsum
 
@@ -534,12 +535,12 @@ def q_isotonic_pava(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scores) on the eval half: group by predicted score, chi-square
 # HL = sum (O - n*s)^2 / (n*s*(1-s)) over the score groups, df = g-2,
 # and the Wilson-Hilferty cube-root normal approximation turns the
-# chi-square into a z and a one-sided p via the house A&S 7.1.26 erfc
-# chain (q_bh_fdr precedent). Where q_calibration_ece reports the
-# gap SIZES (ECE/Brier), this is the significance TEST of the same
-# reliability diagram. Each HL term is 6-rounded then decimal-folded
-# (order-independent); everything downstream is one identical double
-# chain. Scale: two scans to the <=10-score grid.
+# chi-square into a z and a one-sided p = _normal.phi(-z). Where
+# q_calibration_ece reports the gap SIZES (ECE/Brier), this is the
+# significance TEST of the same reliability diagram. Each HL term is
+# 6-rounded then decimal-folded (order-independent); everything
+# downstream is one identical double chain. Scale: two scans to the
+# <=10-score grid.
 
 HL_SPLIT = "2024-01-16"
 
@@ -583,47 +584,10 @@ SELECT t.s AS score, t.n, t.obs, round(t.expd, 2) AS expected,
        round(w.hl, 4) AS hl_stat,
        CAST(w.df AS BIGINT) AS df,
        w.z AS z_wh,
-       round(CASE WHEN w.z >= 0 THEN
-         0.5 * (1.0 / (1.0 + 0.3275911 * (w.z / sqrt(2.0))))
-         * (0.254829592
-            + (1.0 / (1.0 + 0.3275911 * (w.z / sqrt(2.0))))
-            * (-0.284496736
-               + (1.0 / (1.0 + 0.3275911 * (w.z / sqrt(2.0))))
-               * (1.421413741
-                  + (1.0 / (1.0 + 0.3275911 * (w.z / sqrt(2.0))))
-                  * (-1.453152027
-                     + (1.0 / (1.0 + 0.3275911 * (w.z / sqrt(2.0))))
-                     * 1.061405429))))
-         * exp(-(w.z / sqrt(2.0)) * (w.z / sqrt(2.0)))
-       ELSE
-         1.0 - 0.5 * (1.0 / (1.0 + 0.3275911 * (-w.z / sqrt(2.0))))
-         * (0.254829592
-            + (1.0 / (1.0 + 0.3275911 * (-w.z / sqrt(2.0))))
-            * (-0.284496736
-               + (1.0 / (1.0 + 0.3275911 * (-w.z / sqrt(2.0))))
-               * (1.421413741
-                  + (1.0 / (1.0 + 0.3275911 * (-w.z / sqrt(2.0))))
-                  * (-1.453152027
-                     + (1.0 / (1.0 + 0.3275911 * (-w.z / sqrt(2.0))))
-                     * 1.061405429))))
-         * exp(-(w.z / sqrt(2.0)) * (w.z / sqrt(2.0)))
-       END, 6) AS p_miscalibrated
+       round({phi('-w.z')}, 6) AS p_miscalibrated
 FROM term t CROSS JOIN wh w
 ORDER BY t.s
 """
-
-
-def _erfc_half(x):
-    """0.5*erfc(x/sqrt(2)) for x >= 0 via A&S 7.1.26 (house chain)."""
-    u = x / F.sqrt(F.lit(2.0))
-    t = 1.0 / (1.0 + 0.3275911 * u)
-    poly = t * (
-        0.254829592
-        + t * (-0.284496736
-               + t * (1.421413741
-                      + t * (-1.453152027 + t * 1.061405429)))
-    )
-    return 0.5 * poly * F.exp(-u * u)
 
 
 @query("q_hosmer_lemeshow", oracle=HL_SQL)
@@ -678,7 +642,7 @@ def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("z"),
     )
     z = F.col("z")
-    p = F.when(z >= 0, _erfc_half(z)).otherwise(1.0 - _erfc_half(-z))
+    p = phi(-z)
     return (
         term.crossJoin(F.broadcast(wh))
         .select(
@@ -702,12 +666,12 @@ def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 0.5, clamped to [1/m, 1]), then q_j = min_{k>=j}(pi0 * m * p_k / k)
 # — the sharper, adaptive version of q_bh_fdr's step-up (BH assumes
 # pi0 = 1; Storey recovers power when many alternatives are real).
-# P-values via the house A&S 7.1.26 erfc chain on exact-decimal
-# moment z's, 9-rounded before ranking so the order is cross-engine
-# stable. Scale: one part scan to the 25-brand grid + broadcast
-# 1-row global; everything after touches 25 rows.
+# P-values via _normal.erfc_sqrt2 on exact-decimal moment z's,
+# 9-rounded before ranking so the order is cross-engine stable.
+# Scale: one part scan to the 25-brand grid + broadcast 1-row global;
+# everything after touches 25 rows.
 
-STOREY_SQL = """
+STOREY_SQL = f"""
 WITH p0 AS (
   SELECT p_brand, CAST(p_retailprice AS DECIMAL(18,2)) AS pr FROM part
 ), per AS (
@@ -731,19 +695,7 @@ WITH p0 AS (
   FROM per CROSS JOIN gstat
 ), pv AS (
   SELECT p_brand, n1, mean_price, z,
-         round(
-           (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-           * (0.254829592
-              + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-              * (-0.284496736
-                 + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                 * (1.421413741
-                    + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                    * (-1.453152027
-                       + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                       * 1.061405429))))
-           * exp(-(abs(z) / sqrt(2.0)) * (abs(z) / sqrt(2.0))), 9)
-           AS p_raw
+         round({erfc_sqrt2('abs(z)')}, 9) AS p_raw
   FROM zt
 ), pi0c AS (
   SELECT round(
@@ -800,7 +752,7 @@ def q_storey_pi0(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pv = zt.select(
         "p_brand", "n1", "mean_price", "z",
-        F.round(2.0 * _erfc_half(F.abs(F.col("z"))), 9).alias("p_raw"),
+        F.round(erfc_sqrt2(F.abs(F.col("z"))), 9).alias("p_raw"),
     )
     pv = pv.cache()  # 25-row grid feeds pi0 AND the ranked q-value chain
     pi0c = pv.agg(
@@ -842,7 +794,7 @@ def q_storey_pi0(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact decimals so tie groups are deterministic; average ranks are
 # half-integers folded as DECIMAL(28,1); the tie-corrected normal
 # approximation z = (W+ − n(n+1)/4)/sigma with sigma^2 =
-# n(n+1)(2n+1)/24 − Σ(t³−t)/48, p two-sided via the house A&S chain.
+# n(n+1)(2n+1)/24 − Σ(t³−t)/48, p two-sided = _normal.erfc_sqrt2(|z|).
 # Scale: one orders scan collapses to per-customer pairs (natural
 # custkey shuffle); the rank is ONE global sort over the paired
 # customers (range-partitioned total order, mr_total_sort precedent);
@@ -889,23 +841,7 @@ SELECT n AS n_pairs, n_pos, CAST(n - n_pos AS BIGINT) AS n_neg,
        w_plus, round(mu, 2) AS mu,
        round(sigma, 6) AS sigma,
        round((w_plus - mu) / sigma, 6) AS z,
-       round(
-         (1.0 / (1.0 + 0.3275911 * (abs((w_plus - mu) / sigma) / sqrt(2.0))))
-         * (0.254829592
-            + (1.0 / (1.0 + 0.3275911
-                      * (abs((w_plus - mu) / sigma) / sqrt(2.0))))
-            * (-0.284496736
-               + (1.0 / (1.0 + 0.3275911
-                         * (abs((w_plus - mu) / sigma) / sqrt(2.0))))
-               * (1.421413741
-                  + (1.0 / (1.0 + 0.3275911
-                            * (abs((w_plus - mu) / sigma) / sqrt(2.0))))
-                  * (-1.453152027
-                     + (1.0 / (1.0 + 0.3275911
-                               * (abs((w_plus - mu) / sigma) / sqrt(2.0))))
-                     * 1.061405429))))
-         * exp(-(abs((w_plus - mu) / sigma) / sqrt(2.0))
-               * (abs((w_plus - mu) / sigma) / sqrt(2.0))), 9) AS p_two
+       round({erfc_sqrt2('abs((w_plus - mu) / sigma)')}, 9) AS p_two
 FROM stat WHERE sigma > 0
 """
 
@@ -978,7 +914,7 @@ def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("mu", 2).alias("mu"),
         F.round("sigma", 6).alias("sigma"),
         F.round(z, 6).alias("z"),
-        F.round(2.0 * _erfc_half(F.abs(z)), 9).alias("p_two"),
+        F.round(erfc_sqrt2(F.abs(z)), 9).alias("p_two"),
     )
 
 
@@ -1061,11 +997,11 @@ def q_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S0 = Σ_r s_r(s_r−1), S1 = 2·S0, S2 = 4·Σ_r s_r(s_r−1)² — all
 # region-level integer/decimal folds. z-score under the normality
 # null with E[I] = −1/(n−1) and the standard S0/S1/S2 variance;
-# p one-sided (clustered if high) via the house A&S chain. Scale:
+# p one-sided (clustered if high) = _normal.phi(-z). Scale:
 # one customer scan to the 25-nation grid (broadcast nation dim),
 # then region-grid algebra.
 
-MORAN_SQL = """
+MORAN_SQL = f"""
 WITH nm AS (
   SELECT n_nationkey, n_regionkey,
          round(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
@@ -1108,45 +1044,7 @@ SELECT n AS n_nations, s0,
        moran_i, e_i,
        round(var_i, 9) AS var_i,
        round((moran_i - e_i) / sqrt(var_i), 6) AS z,
-       round(CASE WHEN (moran_i - e_i) / sqrt(var_i) >= 0 THEN
-         0.5 * (1.0 / (1.0 + 0.3275911
-                       * (((moran_i - e_i) / sqrt(var_i)) / sqrt(2.0))))
-         * (0.254829592
-            + (1.0 / (1.0 + 0.3275911
-                      * (((moran_i - e_i) / sqrt(var_i)) / sqrt(2.0))))
-            * (-0.284496736
-               + (1.0 / (1.0 + 0.3275911
-                         * (((moran_i - e_i) / sqrt(var_i)) / sqrt(2.0))))
-               * (1.421413741
-                  + (1.0 / (1.0 + 0.3275911
-                            * (((moran_i - e_i) / sqrt(var_i)) / sqrt(2.0))))
-                  * (-1.453152027
-                     + (1.0 / (1.0 + 0.3275911
-                               * (((moran_i - e_i) / sqrt(var_i))
-                                  / sqrt(2.0))))
-                     * 1.061405429))))
-         * exp(-(((moran_i - e_i) / sqrt(var_i)) / sqrt(2.0))
-               * (((moran_i - e_i) / sqrt(var_i)) / sqrt(2.0)))
-       ELSE
-         1.0 - 0.5 * (1.0 / (1.0 + 0.3275911
-                       * ((-(moran_i - e_i) / sqrt(var_i)) / sqrt(2.0))))
-         * (0.254829592
-            + (1.0 / (1.0 + 0.3275911
-                      * ((-(moran_i - e_i) / sqrt(var_i)) / sqrt(2.0))))
-            * (-0.284496736
-               + (1.0 / (1.0 + 0.3275911
-                         * ((-(moran_i - e_i) / sqrt(var_i)) / sqrt(2.0))))
-               * (1.421413741
-                  + (1.0 / (1.0 + 0.3275911
-                            * ((-(moran_i - e_i) / sqrt(var_i)) / sqrt(2.0))))
-                  * (-1.453152027
-                     + (1.0 / (1.0 + 0.3275911
-                               * ((-(moran_i - e_i) / sqrt(var_i))
-                                  / sqrt(2.0))))
-                     * 1.061405429))))
-         * exp(-((-(moran_i - e_i) / sqrt(var_i)) / sqrt(2.0))
-               * ((-(moran_i - e_i) / sqrt(var_i)) / sqrt(2.0)))
-       END, 9) AS p_clustered,
+       round({phi('-((moran_i - e_i) / sqrt(var_i))')}, 9) AS p_clustered,
        CASE WHEN (moran_i - e_i) / sqrt(var_i) > 1.645 THEN 1 ELSE 0 END
          AS clustered_5pct
 FROM stat WHERE var_i > 0
@@ -1215,7 +1113,7 @@ def q_moran_i(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("var_i"),
     )
     zs = (F.col("moran_i") - F.col("e_i")) / F.sqrt(F.col("var_i"))
-    p = F.when(zs >= 0, _erfc_half(zs)).otherwise(1.0 - _erfc_half(-zs))
+    p = phi(-zs)
     return stat.filter(F.col("var_i") > 0).select(
         n.alias("n_nations"), "s0", "moran_i", "e_i",
         F.round("var_i", 9).alias("var_i"),

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
+from redmap_spark.inventory._normal import erfc_sqrt2, phi
 from redmap_spark.inventory.registry import query, spread
 from redmap_spark.plans.prefix import two_phase_cumsum
 
@@ -761,10 +762,10 @@ def q_getis_ord(spark: SparkSession, sf_dir: str) -> DataFrame:
 # χ² = [(N−k)·ln s_p² − Σ(nᵢ−1)·ln sᵢ²] / C with Bartlett's
 # correction C = 1 + (Σ1/(nᵢ−1) − 1/(N−k)) / (3(k−1)) is a ≤5-row
 # grid fold (ln terms 9-rounded decimals), and the p-value maps
-# through the Wilson-Hilferty chi2→normal cube-root plus the house
-# A&S erfc chain. Scale: two customer scans → 5-row grid → 1 row.
+# through the Wilson-Hilferty chi2→normal cube-root plus
+# _normal.phi(-z). Scale: two customer scans → 5-row grid → 1 row.
 
-BARTLETT_SQL = """
+BARTLETT_SQL = f"""
 WITH m1 AS (
   SELECT c_mktsegment AS segment, CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
@@ -803,31 +804,7 @@ WITH m1 AS (
 )
 SELECT k AS n_groups, bign AS n_total, round(x2, 6) AS bartlett_x2, df,
        z AS z_wh,
-       round(CASE WHEN z >= 0 THEN
-         0.5 * (1.0 / (1.0 + 0.3275911 * (z / sqrt(2.0))))
-         * (0.254829592
-            + (1.0 / (1.0 + 0.3275911 * (z / sqrt(2.0))))
-            * (-0.284496736
-               + (1.0 / (1.0 + 0.3275911 * (z / sqrt(2.0))))
-               * (1.421413741
-                  + (1.0 / (1.0 + 0.3275911 * (z / sqrt(2.0))))
-                  * (-1.453152027
-                     + (1.0 / (1.0 + 0.3275911 * (z / sqrt(2.0))))
-                     * 1.061405429))))
-         * exp(-(z / sqrt(2.0)) * (z / sqrt(2.0)))
-       ELSE
-         1.0 - 0.5 * (1.0 / (1.0 + 0.3275911 * (-z / sqrt(2.0))))
-         * (0.254829592
-            + (1.0 / (1.0 + 0.3275911 * (-z / sqrt(2.0))))
-            * (-0.284496736
-               + (1.0 / (1.0 + 0.3275911 * (-z / sqrt(2.0))))
-               * (1.421413741
-                  + (1.0 / (1.0 + 0.3275911 * (-z / sqrt(2.0))))
-                  * (-1.453152027
-                     + (1.0 / (1.0 + 0.3275911 * (-z / sqrt(2.0))))
-                     * 1.061405429))))
-         * exp(-(z / sqrt(2.0)) * (z / sqrt(2.0)))
-       END, 6) AS p_unequal_var
+       round({phi('-z')}, 6) AS p_unequal_var
 FROM wh
 """
 
@@ -901,9 +878,7 @@ def q_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k", "bign", "x2", df.cast("bigint").alias("df"), z.alias("z")
     )
     zc = F.col("z")
-    from redmap_spark.inventory.stats5 import _erfc_half
-
-    p = F.when(zc >= 0, _erfc_half(zc)).otherwise(1.0 - _erfc_half(-zc))
+    p = phi(-zc)
     return wh.select(
         F.col("k").alias("n_groups"),
         F.col("bign").alias("n_total"),
@@ -1093,10 +1068,10 @@ def q_piecewise_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SE_a² = σ̂_M²/S_xx^c and SE_b² = σ̂_Y²·(n·S_xx−S_x²)/det — both
 # residual variances recovered from the same raw-moment grid (RSS =
 # S_yy − β'X'y). One fact scan folds all ten 9-rounded decimal
-# moments; everything after is 1-row algebra through the house erfc
-# chain for the two-sided p. Scale: single partial-aggregated scan.
+# moments; everything after is 1-row algebra, with the two-sided p
+# from _normal.erfc_sqrt2. Scale: single partial-aggregated scan.
 
-MEDIATION_SQL = """
+MEDIATION_SQL = f"""
 WITH rows_ AS (
   SELECT CAST(l_discount AS DOUBLE) AS x,
          ln(CAST(l_quantity AS DOUBLE)) AS m,
@@ -1155,19 +1130,7 @@ SELECT n, round(a, 6) AS a_path, round(b, 6) AS b_path,
        round(cprime + a * b, 6) AS total_effect,
        round(a * b / (cprime + a * b), 6) AS prop_mediated,
        sobel_z,
-       round(2.0 * (CASE WHEN abs(sobel_z) >= 0 THEN
-         0.5 * (1.0 / (1.0 + 0.3275911 * (abs(sobel_z) / sqrt(2.0))))
-         * (0.254829592
-            + (1.0 / (1.0 + 0.3275911 * (abs(sobel_z) / sqrt(2.0))))
-            * (-0.284496736
-               + (1.0 / (1.0 + 0.3275911 * (abs(sobel_z) / sqrt(2.0))))
-               * (1.421413741
-                  + (1.0 / (1.0 + 0.3275911 * (abs(sobel_z) / sqrt(2.0))))
-                  * (-1.453152027
-                     + (1.0 / (1.0 + 0.3275911 * (abs(sobel_z) / sqrt(2.0))))
-                     * 1.061405429))))
-         * exp(-(abs(sobel_z) / sqrt(2.0)) * (abs(sobel_z) / sqrt(2.0)))
-       END), 6) AS p_two_sided
+       round({erfc_sqrt2('abs(sobel_z)')}, 6) AS p_two_sided
 FROM z WHERE cprime + a * b <> 0
 """
 
@@ -1258,8 +1221,6 @@ def q_mediation_sobel(spark: SparkSession, sf_dir: str) -> DataFrame:
         sob.filter(var_ab > 0)
         .withColumn("sobel_z", F.round(av * bv / F.sqrt(var_ab), 6))
     )
-    from redmap_spark.inventory.stats5 import _erfc_half
-
     zc = F.col("sobel_z")
     return (
         z.filter((cp + av * bv) != 0)
@@ -1272,7 +1233,7 @@ def q_mediation_sobel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cp + av * bv, 6).alias("total_effect"),
             F.round(av * bv / (cp + av * bv), 6).alias("prop_mediated"),
             "sobel_z",
-            F.round(2.0 * _erfc_half(F.abs(zc)), 6).alias("p_two_sided"),
+            F.round(erfc_sqrt2(F.abs(zc)), 6).alias("p_two_sided"),
         )
     )
 
@@ -1285,12 +1246,12 @@ def q_mediation_sobel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kruskal midrank algebra: one distinct-value grid gives exact BIGINT
 # 2·R_i per group, mean ranks R̄_i = r2x/(2n_i), and
 # z_ij = (R̄_i−R̄_j)/√((N(N+1)/12 − Σ(t³−t)/(12(N−1)))·(1/n_i+1/n_j))
-# with the tie correction; two-sided p through the house erfc chain,
+# with the tie correction; two-sided p from _normal.erfc_sqrt2,
 # Bonferroni ×k(k−1)/2 capped at 1. The pair join is the ≤5-row
 # group grid against itself. Scale: one fact scan → value grid →
 # 5-row grid → 10 pair rows.
 
-DUNN_SQL = """
+DUNN_SQL = f"""
 WITH vals AS (
   SELECT event_type, value FROM events WHERE value IS NOT NULL
 ), g AS (
@@ -1330,18 +1291,7 @@ pairs AS (
     AND n * (n + 1.0) / 12.0 - ties / (12.0 * (n - 1.0)) > 0
 )
 SELECT type_a, type_b, na AS n_a, nb AS n_b, z,
-       round(LEAST(1.0, k * (k - 1) / 2.0 * 2.0 * (
-         0.5 * (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-         * (0.254829592
-            + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-            * (-0.284496736
-               + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-               * (1.421413741
-                  + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                  * (-1.453152027
-                     + (1.0 / (1.0 + 0.3275911 * (abs(z) / sqrt(2.0))))
-                     * 1.061405429))))
-         * exp(-(abs(z) / sqrt(2.0)) * (abs(z) / sqrt(2.0))))), 6)
+       round(LEAST(1.0, k * (k - 1) / 2.0 * {erfc_sqrt2('abs(z)')}), 6)
          AS p_bonferroni,
        CAST(CASE WHEN abs(z) > 2.807 THEN 1 ELSE 0 END AS INT)
          AS significant_05
@@ -1417,15 +1367,9 @@ def q_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.filter((n > 1) & (var > 0))
         .select("type_a", "type_b", na, nb, k, z.alias("z"))
     )
-    from redmap_spark.inventory.stats5 import _erfc_half
-
     zc = F.col("z")
     p = F.round(
-        F.least(
-            F.lit(1.0),
-            k * (k - 1) / 2.0 * 2.0 * _erfc_half(F.abs(zc)),
-        ),
-        6,
+        F.least(F.lit(1.0), k * (k - 1) / 2.0 * erfc_sqrt2(F.abs(zc))), 6
     )
     return zdf.select(
         "type_a",

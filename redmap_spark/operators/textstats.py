@@ -101,11 +101,12 @@ def prefix_fingerprint(text: Column | str, n_chars: int = 64) -> Column:
 
 
 def mean_word_length(text: Column | str) -> Column:
-    t = tokens(text)
-    total = F.aggregate(
-        F.transform(t, lambda x: F.length(x).cast("double")), F.lit(0.0), lambda a, x: a + x
-    )
-    return F.round(total / F.size(t), 6)
+    """Mean length of the single-space tokens, rounded to 6. n tokens
+    hold n - 1 separators, so their lengths sum to length(text) - n + 1:
+    no per-token lambda."""
+    c = F.col(text) if isinstance(text, str) else text
+    n = ws_token_count(c)
+    return F.round((F.length(c) - n + 1) / n, 6)
 
 
 def alpha_word_frac(text: Column | str) -> Column:

@@ -7,15 +7,38 @@ Settings chosen for correctness-at-scale first:
 - Arrow: every Pandas-UDF path is Arrow-batched.
 - Shuffle partitions default to the local core count; on a real
   cluster AQE coalesces / splits as needed.
+- The package ships to the Python workers as a zip, so UDF code that
+  imports ``redmap_spark`` runs whatever the working directory (and on
+  executors that never saw the source tree).
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
+import zipfile
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+@functools.lru_cache(maxsize=1)
+def _package_zip() -> str:
+    """A stored (uncompressed) zip of ``redmap_spark/**/*.py``, built once
+    per process and removed at exit."""
+    pkg = Path(__file__).resolve().parent
+    out = Path(tempfile.mkdtemp(prefix="redmap-pyfiles-"))
+    atexit.register(shutil.rmtree, out, True)
+    path = out / "redmap_spark.zip"
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_STORED) as zf:
+        for f in sorted(pkg.rglob("*.py")):
+            zf.write(f, f.relative_to(pkg.parent).as_posix())
+    return str(path)
 
 
 def get_spark(app_name: str = "redmap-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -55,4 +78,10 @@ def get_spark(app_name: str = "redmap-spark", shuffle_partitions: int | None = N
     for pair in filter(None, extra.split(";")):
         k, _, v = pair.partition("=")
         builder = builder.config(k.strip(), v.strip())
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    sc, zip_path = spark.sparkContext, _package_zip()
+    # addPyFile records the name in _python_includes; asking the JVM
+    # (sc.listFiles) instead costs ~0.4 s in a fresh JVM.
+    if os.path.basename(zip_path) not in sc._python_includes:
+        sc.addPyFile(zip_path)
+    return spark

@@ -39,6 +39,24 @@ def ddb():
     con.close()
 
 
+def default_oracle_names() -> list[str]:
+    """Entries the default (not `slow`) profile checks: the correctness
+    window, i.e. the first 50 oracle entries in queries() order, the set
+    the next CORRECTNESS run hash-verifies, plus the entries the newest
+    CORRECTNESS_rNN.json verified (the previous window), so a rotation
+    does not drop the last verified set from the default run.
+    """
+    import json
+
+    from redmap_spark.inventory import ORACLES, QUERIES
+
+    window = [n for n in QUERIES if n in ORACLES][:50]
+    runs = sorted(REPO.glob("CORRECTNESS_r[0-9][0-9].json"))
+    last = json.loads(runs[-1].read_text()) if runs else {}
+    green = [k for k, v in last.items() if v.get("hash_match") and k in ORACLES]
+    return window + [n for n in green if n not in set(window)]
+
+
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
     """Mirror the driver's compare: sort columns by name, stringify,
     sort rows."""

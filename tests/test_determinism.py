@@ -14,7 +14,7 @@ import pandas as pd
 import pytest
 
 from redmap_spark.inventory import ORACLES, QUERIES
-from tests.conftest import SF_DIR, normalize
+from tests.conftest import SF_DIR, default_oracle_names, normalize
 
 
 def _check_partition_invariance(spark, name):
@@ -30,22 +30,22 @@ def _check_partition_invariance(spark, name):
     pd.testing.assert_frame_equal(at7, at32, check_dtype=False)
 
 
-# Driver profile (r12): default run = the current driver window (the
-# same 50 entries tests/test_oracle.py checks by default); the rest is
-# the `slow` full sweep (`-m ""`, round-close protocol). The window
-# rotates every round, so full coverage accrues across rounds even
-# without the slow sweep.
-_WINDOW_50 = [n for n in QUERIES if n in ORACLES][:50]
+# Default profile: default_oracle_names() (the same
+# entries tests/test_oracle.py checks by default); the rest is the
+# `slow` full sweep (`-m ""`, round-close protocol). The window rotates
+# every round, so full coverage accrues across rounds even without the
+# slow sweep.
+_DEFAULT = default_oracle_names()
 
 
-@pytest.mark.parametrize("name", _WINDOW_50)
+@pytest.mark.parametrize("name", _DEFAULT)
 def test_partition_count_invariance(spark, name):
     _check_partition_invariance(spark, name)
 
 
 @pytest.mark.slow
 @pytest.mark.parametrize(
-    "name", [n for n in sorted(ORACLES) if n not in set(_WINDOW_50)]
+    "name", [n for n in sorted(ORACLES) if n not in set(_DEFAULT)]
 )
 def test_partition_count_invariance_full(spark, name):
     _check_partition_invariance(spark, name)

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from redmap_spark.inventory import ORACLES, QUERIES
-from tests.conftest import assert_matches_oracle
+from tests.conftest import assert_matches_oracle, default_oracle_names
 
 
 def test_every_query_is_callable():
@@ -16,23 +16,22 @@ def test_every_query_is_callable():
         assert name in QUERIES
 
 
-# Driver profile (r12): the default run checks the CURRENT DRIVER
-# WINDOW — the first 50 oracle entries in queries() order, exactly the
-# set the driver will hash-verify next round — every time; the other
-# ~490 are the `slow` full sweep (run with `-m ""`, the round-close
-# protocol). Rotation (test_window_rotation_covers_all_oracles)
-# guarantees the window cycles through every oracle entry over rounds.
-_WINDOW_50 = [n for n in QUERIES if n in ORACLES][:50]
+# Default profile: the run checks default_oracle_names() (the
+# correctness window plus the last verified set) every time; the rest are
+# the `slow` full sweep (run with `-m ""`, the round-close protocol).
+# Rotation (test_window_rotation_covers_all_oracles) guarantees the
+# window cycles through every oracle entry over rounds.
+_DEFAULT = default_oracle_names()
 
 
-@pytest.mark.parametrize("name", _WINDOW_50)
+@pytest.mark.parametrize("name", _DEFAULT)
 def test_oracle(spark, ddb, name):
     assert_matches_oracle(spark, ddb, name)
 
 
 @pytest.mark.slow
 @pytest.mark.parametrize(
-    "name", [n for n in sorted(ORACLES) if n not in set(_WINDOW_50)]
+    "name", [n for n in sorted(ORACLES) if n not in set(_DEFAULT)]
 )
 def test_oracle_full(spark, ddb, name):
     assert_matches_oracle(spark, ddb, name)

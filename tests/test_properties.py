@@ -804,9 +804,10 @@ def test_inverse_normal_chain_accuracy_and_monotonicity(p):
     erfc-chain error budget, and is monotone."""
     import math
 
-    from redmap_spark.inventory.econ import _INV_NORM_CONSTS
+    from redmap_spark.inventory._normal import _INV_C, _INV_D
 
-    c0, c1, c2, d1, d2, d3 = _INV_NORM_CONSTS
+    c0, c1, c2 = _INV_C
+    d1, d2, d3 = _INV_D
 
     def inv(pp):
         q = pp if pp <= 0.5 else 1.0 - pp

@@ -7,7 +7,7 @@ from collections import Counter
 from pyspark.sql import functions as F
 
 from redmap_spark.catalog import Catalog
-from redmap_spark.operators.textstats import top_bigram_frac
+from redmap_spark.operators.textstats import mean_word_length, top_bigram_frac
 from redmap_spark.pipelines import prepare_training_corpus
 from redmap_spark.plans.explain import executed_plan, has_python_eval
 from tests.conftest import SF_DIR
@@ -72,6 +72,33 @@ def test_top_bigram_frac_matches_counter_reference(spark):
     assert got == want
     assert want[0] is None and want[1] == 1.0 and want[2] is None
     assert 0 < want[3] < 1
+
+
+def test_mean_word_length_matches_per_token_fold(spark):
+    """The separator-count form equals the per-token length fold it
+    replaced, on the rows where the two could part: empty, NULL,
+    leading / trailing / doubled spaces, and non-ASCII text."""
+    cases = [
+        "", None, " lead", "trail ", "double  space", "  ", "single",
+        "the cat sat on the mat", "größe straße ñandú", "日本語 の テキスト 🙂x",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(cases)], "i int, t string")
+    toks = F.split("t", " ")
+    fold = F.round(
+        F.aggregate(
+            F.transform(toks, lambda x: F.length(x).cast("double")),
+            F.lit(0.0), lambda a, x: a + x,
+        ) / F.size(toks),
+        6,
+    )
+    rows = df.select("i", mean_word_length("t").alias("m"), fold.alias("f")).collect()
+    assert {r.i: r.m for r in rows} == {r.i: r.f for r in rows}
+    got = {r.i: r.m for r in rows}
+    assert got[0] == 0.0 and got[1] is None and got[5] == 0.0
+    for i, t in enumerate(cases):
+        if t is not None:
+            ref = sum(len(w) for w in t.split(" ")) / len(t.split(" "))
+            assert abs(got[i] - ref) <= 5e-7, t
 
 
 def test_training_pipeline_dedups_and_filters(spark):
